@@ -13,9 +13,11 @@ object TextStats {
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
   /** size(split(trim(text), "\\s+")) — computed by the native one-scan
-    * counter (TokenCountExpr, equality pinned in TextStatsSpec): the
+    * counter (TokenCountExpr, equality pinned in TokenCountSpec): the
     * split form materialized the whole token array per row everywhere
-    * only the count was needed. */
+    * only the count was needed. A NULL text counts NULL, not the legacy
+    * size(NULL) = -1: sums over counts (Packing, Budget) skip such rows
+    * instead of subtracting one. */
   def tokenCount(text: Column): Column = graft.functions.TextStatFns.tokenCountFast(text)
 
   /** BPE-ish subword count estimate: whitespace tokens plus an extra unit

@@ -45,6 +45,13 @@ class TokenCountSpec extends AnyFunSuite {
       "mixed \t\n ws", "a  b   c", "\t", "\r\n", "ab"))
   }
 
+  test("null text counts NULL tokens, not the legacy size(NULL) = -1") {
+    val r = Seq(Option.empty[String], Some("a b")).toDF("s")
+      .select(graft.ops.TextStats.tokenCount(col("s"))).collect()
+    assert(r(0).isNullAt(0))
+    assert(r(1).getLong(0) == 2L)
+  }
+
   test("property: equal to size(split(trim, \\s+)) on random whitespace-mixed strings") {
     val ws = Gen.oneOf(' ', '\t', '\n', '', '\f', '\r')
     val ch = Gen.frequency(

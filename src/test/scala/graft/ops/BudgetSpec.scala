@@ -14,8 +14,9 @@ class BudgetSpec extends AnyFunSuite {
     (3L, 9L, Seq.fill(20)("w").mkString(" ")),
     (4L, 8L, Seq.fill(30)("w").mkString(" "))).toDF("doc_id", "score", "text")
 
-  private def run(budget: Long, nParts: Int = 3) =
-    Budget.selectByBudget(docs, "doc_id", "score", "text", budget, nParts)
+  private def run(budget: Long, nParts: Int = 3, maxDriverDocs: Int = 1 << 20) =
+    Budget.selectByBudget(docs, "doc_id", "score", "text", budget, nParts,
+      maxDriverDocs = maxDriverDocs)
       .collect().map(r => r.getAs[Long]("doc_id") ->
         ((r.getAs[Long]("cum_tokens"), r.getAs[Boolean]("kept")))).toMap
 
@@ -39,6 +40,9 @@ class BudgetSpec extends AnyFunSuite {
   test("partition-invariant: same ledger at any nParts") {
     val a = run(55L, nParts = 1)
     val b = run(55L, nParts = 7)
+    // the distributed scan (gate forced off)
+    val c = run(55L, nParts = 7, maxDriverDocs = 0)
     assert(a == b)
+    assert(a == c)
   }
 }

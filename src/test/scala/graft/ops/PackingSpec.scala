@@ -36,13 +36,34 @@ class PackingSpec extends AnyFunSuite {
       .orderBy("doc_id").collect().toSeq
     val b = Packing.layout(corpus(40).repartition(13), "doc_id", "text", 8L, nParts = 7)
       .orderBy("doc_id").collect().toSeq
+    // the distributed scan (gate forced off) at the same partition counts
+    val c = Packing.layout(corpus(40).repartition(13), "doc_id", "text", 8L, nParts = 7,
+      maxDriverDocs = 0).orderBy("doc_id").collect().toSeq
     assert(a == b)
+    assert(a == c)
   }
 
   test("empty corpus yields an empty layout, not an analysis error") {
-    val out = Packing.layout(corpus(5).filter($"doc_id" > 100), "doc_id", "text", 16L)
-    assert(out.count() == 0)
-    assert(out.columns.contains("start_tok"))
+    for (gate <- Seq(1 << 20, 0)) {
+      val out = Packing.layout(corpus(5).filter($"doc_id" > 100), "doc_id", "text", 16L,
+        maxDriverDocs = gate)
+      assert(out.count() == 0)
+      assert(out.columns.contains("start_tok"))
+    }
+  }
+
+  test("null text: same layout on both sides of the doc-count gate") {
+    // tokenCount(NULL) is NULL, so the driver side falls through to the
+    // distributed scan, where the null doc adds nothing to the running sum
+    val df = corpus(6).withColumn("text", when($"doc_id" === 2L, lit(null)).otherwise($"text"))
+    val fast = Packing.layout(df, "doc_id", "text", 4L, nParts = 3)
+    val dist = Packing.layout(df, "doc_id", "text", 4L, nParts = 3, maxDriverDocs = 0)
+    assert(fast.schema == dist.schema)
+    val rows = fast.orderBy("doc_id").collect().toSeq
+    assert(rows == dist.orderBy("doc_id").collect().toSeq)
+    assert(rows(2).isNullAt(rows(2).fieldIndex("n_tokens")))
+    // docs 0, 1 hold 1 + 2 tokens; doc 3 starts right after them
+    assert(rows(3).getAs[Long]("start_tok") == 3L)
   }
 
   test("doc straddling a boundary spans both sequences") {

@@ -309,6 +309,7 @@ class PlanSpec extends AnyFunSuite {
       nParts = 8, maxDriverDocs = 0)
     assert(treeNames(executed(fast)).forall(!_.contains("Exchange")),
       treeNames(executed(fast)).distinct)
+    assert(fast.schema == dist.schema)
     val k = fast.columns.map(org.apache.spark.sql.functions.col)
     assert(fast.orderBy(k: _*).collect().toSeq ==
       dist.select(k: _*).orderBy(k: _*).collect().toSeq)
@@ -634,6 +635,20 @@ class PlanSpec extends AnyFunSuite {
       Set("doc_id", "perm_key", "__pid"))), sc)
   }
 
+  test("global shuffle layout under the doc-count gate: local plan, identical rows") {
+    val fast = graft.ops.Shard.globalShuffleLayout(
+      docs, "doc_id", a = 73L, b = 11L, p = 1000003L, shardSize = 16L, nParts = 8)
+    val dist = graft.ops.Shard.globalShuffleLayout(
+      docs, "doc_id", a = 73L, b = 11L, p = 1000003L, shardSize = 16L, nParts = 8,
+      maxDriverDocs = 0)
+    assert(treeNames(executed(fast)).forall(!_.contains("Exchange")),
+      treeNames(executed(fast)).distinct)
+    assert(fast.schema == dist.schema)
+    val k = fast.columns.map(org.apache.spark.sql.functions.col)
+    assert(fast.orderBy(k: _*).collect().toSeq ==
+      dist.select(k: _*).orderBy(k: _*).collect().toSeq)
+  }
+
   test("budget select: windows are partition-local, post-checkpoint exchange is fixed-width") {
     import org.apache.spark.sql.functions._
     // distributed path pinned (gate forced off) — the corpus-scale plan
@@ -667,6 +682,7 @@ class PlanSpec extends AnyFunSuite {
       maxDriverDocs = 0)
     assert(treeNames(executed(fast)).forall(!_.contains("Exchange")),
       treeNames(executed(fast)).distinct)
+    assert(fast.schema == dist.schema)
     val k = fast.columns.map(col)
     assert(fast.orderBy(col("doc_id")).collect().toSeq ==
       dist.select(k: _*).orderBy(col("doc_id")).collect().toSeq)
